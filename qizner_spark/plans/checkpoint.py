@@ -33,6 +33,22 @@ Crash analysis (see tests/test_streaming_resume.py):
 Because the manifest covers zero-triple urls too, nothing is ever
 reprocessed after a successful commit (the pre-round-3 residue).
 
+Pass structure of one increment (:func:`run_resumable`), so that an
+increment costs about what its pages cost, not what the sink holds:
+
+  * the committed key set is read ONCE: :func:`processed_keys` is
+    cached (url column only) and the pending count is its barrier;
+    detection and the manifest commit both anti-join against that
+    cache instead of re-reading manifest and sink;
+  * the staged write is the ONLY pass over the triples (no cache, no
+    count pass); a rebalance on ``subj_bucket`` lets AQE size the
+    write tasks, so a small increment writes one file per bucket;
+  * the triple count and the per-bucket lineage rows are read back
+    from the staged files (url column + partition directories)
+    between STAGE and COMMIT. The staged files carry no lineage back
+    to the manifest, so the manifest append cannot invalidate them;
+  * every cache the increment made is released in a ``finally``.
+
 Pre-protocol sinks (data directly under ``subj_bucket=...`` with no
 ``run_id=`` level) need a ONE-TIME migration before resuming under
 this protocol: move the old data under a synthetic
@@ -246,6 +262,21 @@ def recover_sink(spark: SparkSession, sink_path: str, fs=None) -> dict:
     return {"rolled_forward": fwd, "rolled_back": back}
 
 
+def _staged_lineage(spark: SparkSession, staging: str) -> list:
+    """Per-bucket lineage rows of a staged increment: triple count and
+    distinct source urls per ``subj_bucket``, read from the staged
+    files (the url column and the partition directories only). The
+    explicit schema reads an increment that staged no triples as empty
+    instead of failing schema inference on a directory with no file."""
+    return (
+        spark.read.schema("url string, subj_bucket long").parquet(staging)
+        .groupBy("subj_bucket")
+        .agg(F.count(F.lit(1)).alias("n_triples"),
+             F.countDistinct("url").alias("n_source_urls"))
+        .collect()
+    )
+
+
 def run_resumable(
     spark: SparkSession,
     pages: DataFrame,
@@ -259,6 +290,21 @@ def run_resumable(
     recover -> filter-to-pending -> build KG -> stage -> commit
     manifest -> publish. Crash/rerun safe at every step boundary.
 
+    Each increment makes one pass over its data:
+
+      * the committed key set (manifest union sink, url column) is
+        read once and cached; the pending count is its barrier, and
+        detection and the manifest commit anti-join against the cache;
+      * the staged write is the only pass over the triples: a
+        rebalance on ``subj_bucket`` in front of it lets AQE size the
+        write tasks (and split a skewed bucket), so a bucket lands in
+        one file unless it is large;
+      * ``n_new_triples`` and the per-bucket lineage rows come from a
+        narrow read of the staged files, between STAGE and COMMIT;
+      * every cache the increment made (the key set, the mentions,
+        the assembly rollups) is released on the way out, on success,
+        on a no-op rerun and on a crash alike.
+
     ``crash_after`` ('stage' | 'commit') raises :class:`SimulatedCrash`
     at the corresponding point — test hook for the crash-injection
     suite; never set it in production.
@@ -268,73 +314,62 @@ def run_resumable(
     hdfs://, s3a://, ...). Spark's own parquet writes resolve the
     same URIs through the identical Hadoop configuration, so both
     halves of the protocol always target one store."""
+    from pyspark import StorageLevel
+
     from qizner_spark.plans.pipeline import build_kg
 
     fs = fs or LocalFS()
     sink_path = fs.normalize(sink_path)
     recovered = recover_sink(spark, sink_path, fs=fs)
-    done = processed_keys(spark, sink_path)
-    todo = pending_only(pages, done)
-    t0 = time.time()
-    n_pending = todo.count()
-    if n_pending == 0:
-        metrics = {"n_pending": 0, "n_new_triples": 0, "wall_sec": round(time.time() - t0, 3),
-                   "resumed": done is not None, "ts": int(time.time()), **recovered}
-    else:
-        run_id = uuid.uuid4().hex[:16]
-        stages = build_kg(spark, todo, **kg_kwargs)
-        triples = stages["triples"].withColumn(
-            "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(64))
-        ).persist()
-        n_new = triples.count()
-        # per-partition lineage for THIS increment (north_rule: one
-        # row per subj_bucket x run_id with triple + source-url
-        # counts). Aggregated to the driver NOW — <= 64 rows — and
-        # written only after publish: the manifest append below
-        # invalidates every cached plan that READS the manifest path
-        # (triples' lineage does, through the resume anti-join), so a
-        # lazy lineage aggregate evaluated after the commit would
-        # recompute against the new manifest and see an empty todo.
-        lineage = None
-        if metrics_path:
-            lineage = (
-                triples.groupBy("subj_bucket")
-                .agg(F.count(F.lit(1)).alias("n_triples"),
-                     F.countDistinct("url").alias("n_source_urls"))
-                .collect()
-            )
-        # 1. STAGE (invisible: underscore prefix hides it from reads)
-        staging = posixpath.join(sink_path, "_staging", run_id)
-        triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(staging)
-        if crash_after == "stage":
-            raise SimulatedCrash("crashed after staging, before manifest commit")
-        # 2. COMMIT: single-file manifest append = one atomic rename.
-        #    Covers zero-triple urls too, so nothing ever reprocesses.
-        todo.select("url").distinct().withColumn(
-            "run_id", F.lit(run_id)
-        ).coalesce(1).write.mode("append").parquet(f"{sink_path}_processed")
-        if crash_after == "commit":
-            raise SimulatedCrash("crashed after manifest commit, before publish")
-        # 3. PUBLISH: one directory rename
-        fs.rename(staging, posixpath.join(sink_path, f"run_id={run_id}"))
-        metrics = {
-            "n_pending": n_pending,
-            "n_new_triples": n_new,
-            "wall_sec": round(time.time() - t0, 3),
-            "resumed": done is not None,
-            "ts": int(time.time()),
-            "run_id": run_id,
-            **recovered,
-        }
-        if metrics_path and lineage is not None:
-            ts = int(time.time())
+    owned: list[DataFrame] = []  # every cache this increment makes
+    try:
+        done = processed_keys(spark, sink_path)
+        if done is not None:
+            done = done.persist(StorageLevel.MEMORY_AND_DISK)
+            owned.append(done)
+        todo = pending_only(pages, done)
+        t0 = time.time()
+        n_pending = todo.count()  # builds the key-set cache
+        metrics = {"n_pending": n_pending, "n_new_triples": 0}
+        lineage = []
+        if n_pending:
+            run_id = uuid.uuid4().hex[:16]
+            stages = build_kg(spark, todo, **kg_kwargs)
+            owned += [stages["mentions"], *stages["triples"]._qizner_persisted]
+            # 1. STAGE (invisible: underscore prefix hides it from reads)
+            staging = posixpath.join(sink_path, "_staging", run_id)
+            (stages["triples"]
+             .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(64)))
+             .hint("rebalance", "subj_bucket")
+             .write.mode("overwrite").partitionBy("subj_bucket").parquet(staging))
+            # per-partition lineage (north_rule: one row per subj_bucket
+            # x run_id with triple + source-url counts)
+            lineage = _staged_lineage(spark, staging)
+            metrics["n_new_triples"] = sum(r["n_triples"] for r in lineage)
+            if crash_after == "stage":
+                raise SimulatedCrash("crashed after staging, before manifest commit")
+            # 2. COMMIT: single-file manifest append = one atomic rename.
+            #    Covers zero-triple urls too, so nothing ever reprocesses.
+            todo.select("url").distinct().withColumn(
+                "run_id", F.lit(run_id)
+            ).coalesce(1).write.mode("append").parquet(f"{sink_path}_processed")
+            if crash_after == "commit":
+                raise SimulatedCrash("crashed after manifest commit, before publish")
+            # 3. PUBLISH: one directory rename
+            fs.rename(staging, posixpath.join(sink_path, f"run_id={run_id}"))
+            metrics["run_id"] = run_id
+    finally:
+        for df in owned:
+            df.unpersist()
+    metrics.update(wall_sec=round(time.time() - t0, 3), resumed=done is not None,
+                   ts=int(time.time()), **recovered)
+    if metrics_path:
+        if lineage:
             spark.createDataFrame(
                 [(r["subj_bucket"], r["n_triples"], r["n_source_urls"],
-                  run_id, ts) for r in lineage],
+                  metrics["run_id"], metrics["ts"]) for r in lineage],
                 "subj_bucket long, n_triples long, n_source_urls long, "
                 "run_id string, ts long",
             ).coalesce(1).write.mode("append").json(f"{metrics_path}_partitions")
-        triples.unpersist()
-    if metrics_path:
         spark.createDataFrame([metrics]).write.mode("append").json(metrics_path)
     return metrics

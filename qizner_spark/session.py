@@ -22,6 +22,58 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def planned_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df``'s output as its physical plan fixes it
+    before anything runs, or None when only execution can tell.
+
+    Reads the plan and nothing else. ``df.rdd.getNumPartitions()`` is
+    not a planning call under AQE: building the RDD of an adaptive plan
+    runs its query stages, so probing an anti-joined input that way
+    executed the join's shuffle and broadcast jobs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    adaptive = plan.nodeName() == "AdaptiveSparkPlan"
+    # the adaptive plan's initial form carries the exchanges
+    # EnsureRequirements inserts, before any stage has run
+    return _plan_width(plan.initialPlan() if adaptive else plan, adaptive)
+
+
+def _plan_width(node, adaptive: bool) -> int | None:
+    kind = node.getClass().getSimpleName()
+    if kind == "ShuffleExchangeExec":
+        width = node.outputPartitioning().numPartitions()
+        # AQE may coalesce or split a shuffle at runtime, except an
+        # explicit repartition(n) and a single-partition exchange
+        fixed = (not adaptive or width == 1
+                 or node.shuffleOrigin().toString() == "REPARTITION_BY_NUM")
+        return width if fixed else None
+    if kind in ("CollectLimitExec", "TakeOrderedAndProjectExec"):
+        return 1
+    if kind == "FileSourceScanExec":
+        if not node.subqueries().isEmpty():
+            return None  # dynamic partition pruning: the files depend on a subquery
+        return node.inputRDD().getNumPartitions()  # file splits: listing only
+    if kind in ("LocalTableScanExec", "RangeExec", "RDDScanExec"):
+        return node.execute().getNumPartitions()  # builds the RDD, runs no job
+    if kind == "InMemoryTableScanExec":
+        # a cache's width is known once it is built; building it is a job
+        builder = node.relation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            return None
+        return builder.cachedColumnBuffers().getNumPartitions()
+    # a broadcast side never sets the width of the join that reads it
+    children = [node.children().apply(i) for i in range(node.children().size())]
+    children = [c for c in children
+                if c.getClass().getSimpleName() != "BroadcastExchangeExec"]
+    widths = [_plan_width(c, adaptive) for c in children]
+    if not widths or None in widths:
+        return None  # an unknown leaf, or a width set at runtime below
+    if kind == "UnionExec" and node.outputPartitioning().numPartitions() == 0:
+        return sum(widths)  # a plain RDD union concatenates partitions
+    if kind == "CoalesceExec":
+        return min(node.numPartitions(), widths[0])
+    return widths[0]  # narrow operators and co-partitioned joins
+
+
 def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition a NARROW source up to the session's
     default parallelism when the file layout under-splits it.
@@ -33,12 +85,17 @@ def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) ->
     unsplittable file ... repartition immediately after the read").
     The repartition moves only the narrow source rows once; at real
     scale inputs arrive pre-split into >= parallelism partitions and
-    this is a no-op (the partition probe is driver-side planning, no
-    job). Derived heavy columns (html wrap, token explode, signatures)
+    this is a no-op. The probe is :func:`planned_partitions`, which
+    reads the physical plan and runs no job for any input. When the
+    plan leaves the width to runtime (an AQE-sized shuffle, an unbuilt
+    cache), the input is widened: AQE sizes partitions by bytes, and
+    narrow rows bound for a CPU-heavy pass coalesce into too few.
+    Derived heavy columns (html wrap, token explode, signatures)
     must be computed AFTER this call so only source bytes shuffle."""
     sc = df.sparkSession.sparkContext
     target = int(min_partitions or sc.defaultParallelism)
-    if df.rdd.getNumPartitions() >= target:
+    width = planned_partitions(df)
+    if width is not None and width >= target:
         return df
     return df.repartition(target)
 

@@ -500,6 +500,87 @@ class TestPerPartitionLineage:
         assert pp.where(F.col("n_source_urls") < 1).count() == 0
 
 
+class TestIncrementPasses:
+    """One pass per increment: the committed keys are read once, the
+    staged write is the only pass over the triples, lineage comes from
+    the staged files, and every cache the increment made is released."""
+
+    # Spark jobs of one run_resumable increment (metrics on) into a
+    # non-empty sink on the fixture, local[4]: 45 before the one-pass
+    # rework (anti-joins re-evaluated against manifest and sink, a
+    # triple cache + count pass, a width probe that ran query stages),
+    # 37 after it.
+    INCREMENT_JOB_BUDGET = 37
+
+    def test_increment_job_budget(self, spark, sf_dir, tmp_path, count_jobs):
+        pages = pages_from_documents(spark, sf_dir)
+        sink = str(tmp_path / "triples")
+        run_resumable(spark, pages.limit(20), sink)
+        m, jobs = count_jobs(lambda: run_resumable(
+            spark, pages, sink, metrics_path=str(tmp_path / "metrics")))
+        assert m["n_pending"] == pages.count() - 20
+        assert jobs <= self.INCREMENT_JOB_BUDGET, jobs
+
+    def test_increment_releases_its_caches(self, spark, sf_dir, tmp_path):
+        from qizner_spark.plans.checkpoint import SimulatedCrash
+
+        def persistent():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        pages = pages_from_documents(spark, sf_dir)
+        sink = str(tmp_path / "triples")
+        before = persistent()
+        run_resumable(spark, pages.limit(10), sink)  # into an empty sink
+        assert persistent() == before
+        assert run_resumable(spark, pages.limit(20), sink)["n_pending"] == 10
+        assert persistent() == before
+        assert run_resumable(spark, pages.limit(20), sink)["n_pending"] == 0  # rerun
+        assert persistent() == before
+        with pytest.raises(SimulatedCrash):
+            run_resumable(spark, pages.limit(30), sink, crash_after="stage")
+        assert persistent() == before
+
+    def test_zero_triple_increment_commits_and_publishes(self, spark, sf_dir, tmp_path):
+        """Pending pages that yield no mention still commit their
+        manifest rows and publish; the increment reports no triples
+        and writes no lineage row."""
+        import functools
+        import os
+
+        from qizner_spark.core.scoring import GazetteerScorer
+
+        pages = pages_from_documents(spark, sf_dir).limit(5)
+        sink, mpath = str(tmp_path / "triples"), str(tmp_path / "metrics")
+        no_mentions = functools.partial(GazetteerScorer, {}, token_deli=" ")
+        m = run_resumable(spark, pages, sink, metrics_path=mpath, scorer_factory=no_mentions)
+        assert m["n_pending"] == 5 and m["n_new_triples"] == 0
+        manifest = spark.read.parquet(f"{sink}_processed")
+        assert {r["run_id"] for r in manifest.collect()} == {m["run_id"]}
+        assert manifest.count() == 5
+        assert os.path.isdir(os.path.join(sink, f"run_id={m['run_id']}"))  # published
+        assert os.listdir(os.path.join(sink, "_staging")) == []
+        assert not os.path.exists(f"{mpath}_partitions")
+        assert spark.read.json(mpath).first()["n_new_triples"] == 0
+        assert run_resumable(spark, pages, sink)["n_pending"] == 0
+
+    def test_small_increment_writes_one_file_per_bucket(self, spark, sf_dir, tmp_path):
+        """A write task used to emit one file for every bucket it
+        touched; the rebalance on subj_bucket gives a bucket of a small
+        increment to one task, so one file."""
+        import os
+
+        pages = pages_from_documents(spark, sf_dir)
+        sink = str(tmp_path / "triples")
+        run_resumable(spark, pages.limit(20), sink)
+        m = run_resumable(spark, pages.limit(60), sink)
+        run_dir = os.path.join(sink, f"run_id={m['run_id']}")
+        buckets = [b for b in os.listdir(run_dir) if b.startswith("subj_bucket=")]
+        assert buckets
+        for b in buckets:
+            files = [f for f in os.listdir(os.path.join(run_dir, b)) if f.endswith(".parquet")]
+            assert len(files) == 1, (b, files)
+
+
 class TestStreamingDedup:
     """stream_dedup_pages: exact dedup within the watermark window,
     bounded state, exactly-once across restarts."""
